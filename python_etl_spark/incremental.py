@@ -38,9 +38,7 @@ import datetime
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from python_etl_spark.sinks.table import VersionedTable
-
-_WM_KEY = "watermark"
+from python_etl_spark.sinks.table import WATERMARK_KEY, VersionedTable
 
 
 def _serialize(value):
@@ -60,14 +58,22 @@ def last_watermark(table: VersionedTable) -> object | None:
     """The committed bookmark, or None for a first run. Walks version
     history newest-first: a manual append()/merge() in between (no
     watermark meta) must not make the loader forget its bookmark and
-    re-extract the full history as duplicates."""
+    re-extract the full history as duplicates. The walk stops at the
+    newest checkpoint, which carries the bookmark of every version at
+    or below it (clean_metadata may have dropped their manifests)."""
     if not table.exists():
         return None
-    for v in range(table.latest_version(), -1, -1):
-        wm = table.meta(v).get(_WM_KEY, {}).get("value")
+    latest = table.latest_version()
+    ckpt = table._latest_checkpoint(latest)
+    if ckpt is None or WATERMARK_KEY not in ckpt:
+        # no checkpoint, or one that does not know every bookmark at or
+        # below it (see VersionedTable._write_checkpoint): full walk
+        ckpt = {"version": -1, WATERMARK_KEY: None}
+    for v in range(latest, ckpt["version"], -1):
+        wm = table.meta(v).get(WATERMARK_KEY, {}).get("value")
         if wm is not None:
             return wm
-    return None
+    return (ckpt[WATERMARK_KEY] or {}).get("value")
 
 
 def incremental_load(
@@ -111,7 +117,7 @@ def incremental_load(
                 "watermark": last,
             }
         wm = _serialize(stats["wm"])
-        meta = {_WM_KEY: {"col": watermark_col, "value": wm}}
+        meta = {WATERMARK_KEY: {"col": watermark_col, "value": wm}}
         if not table.exists():
             v = table.create(batch, meta=meta, partition_by=partition_by)
         elif keys:

@@ -26,6 +26,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from python_etl_spark.memo import plan_key, session_drop, session_memo
+
 
 # Source bytes per sketch task when spreading a narrow scan. The
 # sketch stages (shingling, minhash/simhash Arrow kernels) are
@@ -36,48 +38,24 @@ from pyspark.sql import functions as F
 # The target count is derived from Catalyst's plan-stats size estimate
 # (guide §2: scale-adaptive, derived from input size, never a
 # core-count constant) and capped at the session parallelism.
-# Parameterised for cluster tuning; the default keeps the driver bench
-# comparable across rounds.
-def _spread_task_bytes() -> int:
-    import os
-
-    return int(
-        os.environ.get("SPARK_GRAFT_SPREAD_TASK_BYTES", str(96 * 1024))
-    )
-
-
-# (applicationId, analyzed-plan semanticHash, source fingerprint) ->
-# target partition count (0 = leave the source partitioning alone).
-# docs.rdd.getNumPartitions() forces a full physical planning pass and
-# .stats() an optimize pass (~35+80 ms py4j+Catalyst) on EVERY query
-# construction; the answer is a pure function of (plan, backing files)
-# within a session, so memoize the decision (same pattern as
-# plans.common.bc_dim — the file fingerprint invalidates on in-place
-# rewrites of the same path, which semanticHash alone cannot see).
-_NPART_MEMO: dict[tuple, int] = {}
+_SPREAD_TASK_BYTES = 96 * 1024
 
 
 def _spread(docs: DataFrame) -> DataFrame:
     """Repartition a too-narrow source scan for the sketch stages
     (document tables often arrive as a single file/partition, leaving
     explode+hash single-threaded). The target partition count derives
-    from the input size estimate — ceil(size / _spread_task_bytes()),
+    from the input size estimate — ceil(size / _SPREAD_TASK_BYTES),
     capped at the session's parallelism — so tiny corpora get a few
     fat tasks instead of a per-core fan-out, and the count grows with
-    the data until the cap."""
-    from python_etl_spark.sources.tables import source_fingerprint
+    the data until the cap.
 
+    The decision (0 = leave the source partitioning alone) costs a
+    physical planning pass plus a stats probe (~35+80 ms), so it is
+    memoized per (plan, backing files), like plans.common.bc_dim."""
     sc = docs.sparkSession.sparkContext
-    try:
-        key = (
-            sc.applicationId,
-            docs._jdf.queryExecution().analyzed().semanticHash(),
-            source_fingerprint(docs),
-        )
-        target = _NPART_MEMO.get(key)
-    except Exception:  # pragma: no cover - py4j surface drift
-        key, target = None, None
-    if target is None:
+
+    def build() -> int:
         n_src = docs.rdd.getNumPartitions()
         try:
             est = int(
@@ -86,15 +64,13 @@ def _spread(docs: DataFrame) -> DataFrame:
             )
             want = min(
                 sc.defaultParallelism,
-                max(1, -(-est // _spread_task_bytes())),
+                max(1, -(-est // _SPREAD_TASK_BYTES)),
             )
         except Exception:  # no stats: fall back to the core count
             want = sc.defaultParallelism
-        target = 0 if n_src >= want else want
-        if key is not None:
-            if len(_NPART_MEMO) > 4096:
-                _NPART_MEMO.clear()
-            _NPART_MEMO[key] = target
+        return 0 if n_src >= want else want
+
+    target = session_memo("spread", plan_key(docs), build, capacity=4096)
     return docs.repartition(target) if target else docs
 
 
@@ -103,15 +79,26 @@ def _arrow_engine_available() -> bool:
     workers. A driver-side import is the cheap proxy (local mode shares
     the env; on a cluster with mismatched executor images the task
     raises the normal worker ImportError — the JVM twins stay available
-    as ``engine='jvm'``). Checked where the DEFAULT is applied so a
-    numpy-less deployment degrades to pure Catalyst instead of failing
-    at runtime (ADVICE r14)."""
+    as ``engine='jvm'``)."""
     try:
         import numpy  # noqa: F401
         import pyarrow  # noqa: F401
     except ImportError:
         return False
     return True
+
+
+def _resolve_engine(engine: str | None) -> str:
+    """Only the DEFAULT (``engine=None``) degrades to the pure-Catalyst
+    twin in a numpy-less deployment; an explicit ``engine='arrow'``
+    there raises instead of being silently overridden."""
+    if engine is None:
+        return "arrow" if _arrow_engine_available() else "jvm"
+    if engine == "arrow" and not _arrow_engine_available():
+        raise ImportError(
+            "engine='arrow' needs numpy and pyarrow; pass engine='jvm'"
+        )
+    return engine
 
 
 # ------------------------------- shingling --------------------------------
@@ -182,45 +169,31 @@ def _cap_doc_freq(sh: DataFrame, max_doc_freq: int | None) -> DataFrame:
 
 
 # One cached hashed-shingle frame, shared across the containment /
-# jaccard / boilerplate family within a session. Single slot: a new
-# key (different session, source plan, or shingling params) unpersists
-# the previous frame, so cache usage is bounded to one frame no matter
-# how many queries run. The frame is repartitioned by `sh` BEFORE the
-# distinct, so (a) the distinct needs no extra exchange (sh-hash
-# clustering satisfies the (id, sh) grouping), and (b) the cached
-# InMemoryRelation advertises hashpartitioning(sh) — inverted-index
-# self-joins and per-shingle df aggregations over it plan with ZERO
-# additional exchanges.
-_SHARED_SH: dict = {}
+# jaccard / boilerplate family within a session. The frame is
+# repartitioned by `sh` BEFORE the distinct, so (a) the distinct needs
+# no extra exchange (sh-hash clustering satisfies the (id, sh)
+# grouping), and (b) the cached InMemoryRelation advertises
+# hashpartitioning(sh) — inverted-index self-joins and per-shingle df
+# aggregations over it plan with ZERO additional exchanges.
+
+
+def _unpersist(df: DataFrame) -> None:
+    try:
+        df.unpersist(blocking=False)
+    except Exception:
+        # the frame's session may be stopped — its cache died with
+        # the session; nothing to free
+        pass
 
 
 def clear_shared_shingle_cache() -> None:
     """Drop the shared-shingle memo (and unpersist its cached frame).
 
-    Call between benchmark passes (or after overwriting a source dir)
-    when the memo must not carry state across measurements."""
-    old = _SHARED_SH.pop("df", None)
-    _SHARED_SH.pop("key", None)
-    if old is not None:
-        try:
-            old.unpersist(blocking=False)
-        except Exception:
-            pass
-
-
-def _source_fingerprint(docs: DataFrame) -> tuple:
-    """Best-effort fingerprint of the frame's backing files.
-
-    The memo key must change when the SAME paths are overwritten with
-    new data (plan semanticHash is stable across a rewrite — e.g.
-    scripts/make_scale_replica.py regenerating a dir in-session would
-    otherwise be served stale shingles). Delegates to the shared
-    sources.tables.source_fingerprint (one metadata stat per file; a
-    remote in-place overwrite still needs an explicit
-    :func:`clear_shared_shingle_cache`)."""
-    from python_etl_spark.sources.tables import source_fingerprint
-
-    return source_fingerprint(docs)
+    Call between benchmark passes (or after overwriting a source dir
+    on a non-local filesystem, which the source fingerprint cannot
+    see) when the memo must not carry state across measurements."""
+    for df in session_drop("shared_shingles"):
+        _unpersist(df)
 
 
 def shared_shingle_hashes(
@@ -240,75 +213,61 @@ def shared_shingle_hashes(
     ``na`` is the doc's distinct-shingle count, computed from the gram
     array BEFORE the explode — so uncapped consumers never need a
     per-doc sizes aggregation or its join: Jaccard / containment
-    denominators ride along the pair join as first() aggregates."""
-    spark = docs.sparkSession
-    try:
-        # applicationId (not id() of a py4j proxy) — CPython can reuse
-        # a GC'd proxy's id for a NEW session, which would hand the new
-        # session a frame bound to a stopped one. The source
-        # fingerprint invalidates on in-place overwrites of the same
-        # paths, which semanticHash alone cannot see.
-        key = (
-            spark.sparkContext.applicationId,
-            docs._jdf.queryExecution().analyzed().semanticHash(),
-            _source_fingerprint(docs),
-            text_col,
-            id_col,
-            k,
+    denominators ride along the pair join as first() aggregates.
+
+    The memo has one slot: a new key (different session, source plan,
+    or shingling params) unpersists the previous frame, so cache usage
+    is bounded to one frame no matter how many queries run."""
+
+    def build() -> DataFrame:
+        src = _spread(docs)
+        toks = F.split(F.col(text_col), " ", -1)
+        n_sh = F.size(toks) - F.lit(k - 1)
+        grams = F.when(
+            n_sh >= 1,
+            F.transform(_word_grams(toks, k), lambda g: F.xxhash64(g)),
+        ).otherwise(F.array(F.xxhash64(F.concat_ws(" ", toks))))
+        # array_distinct dedupes per doc BEFORE the explode, so every
+        # exploded row is already a distinct (id, sh) pair — the only
+        # shuffle left is the repartition that gives consumers their
+        # exchange-free hashpartitioning(sh).
+        sh = (
+            src.select(
+                F.col(id_col).alias("id"),
+                F.array_distinct(grams).alias("arr"),
+            )
+            .select(
+                "id",
+                F.size("arr").alias("na"),
+                F.explode("arr").alias("sh"),
+            )
+            .repartition("sh")
+            .cache()
         )
-    except Exception:  # pragma: no cover - py4j surface drift
-        key = None
-    if key is not None and _SHARED_SH.get("key") == key:
-        return _SHARED_SH["df"]
-    docs = _spread(docs)
-    toks = F.split(F.col(text_col), " ", -1)
-    n_sh = F.size(toks) - F.lit(k - 1)
-    grams = F.when(
-        n_sh >= 1,
-        F.transform(_word_grams(toks, k), lambda g: F.xxhash64(g)),
-    ).otherwise(F.array(F.xxhash64(F.concat_ws(" ", toks))))
-    # array_distinct dedupes per doc BEFORE the explode, so every
-    # exploded row is already a distinct (id, sh) pair — the only
-    # shuffle left is the repartition that gives consumers their
-    # exchange-free hashpartitioning(sh).
-    sh = (
-        docs.select(
-            F.col(id_col).alias("id"),
-            F.array_distinct(grams).alias("arr"),
-        )
-        .select(
-            "id",
-            F.size("arr").alias("na"),
-            F.explode("arr").alias("sh"),
-        )
-        .repartition("sh")
-        .cache()
+        # EAGERLY materialized (r15, guide §2.4): a plan made against a
+        # COLD cache cannot see the frame's hashpartitioning(sh) — the
+        # InMemoryRelation wraps an unfinalized AdaptiveSparkPlan, so
+        # EnsureRequirements re-shuffles BOTH sides of every
+        # inverted-index self-join (two full exchanges of the exploded
+        # shingle frame, the dominant shuffle at scale) and the racing
+        # same-job readers serialize on block locks while populating
+        # it. Materializing here finalizes the cached plan, so even the
+        # FIRST consumer plans SortMergeJoin directly over
+        # InMemoryTableScan with zero join-side exchanges. Cost: one
+        # extra job per cache build (cold A/B at sf0.1: 8.9 s one-shot
+        # cold plan -> 2.5 s + build with the eager count). This is a
+        # lazy-plan cache keyed to the source fingerprint, populated
+        # inside the measured run — not cross-run result reuse.
+        sh.count()
+        return sh
+
+    return session_memo(
+        "shared_shingles",
+        plan_key(docs, text_col, id_col, k),
+        build,
+        capacity=1,
+        on_evict=_unpersist,
     )
-    # EAGERLY materialized (r15, guide §2.4): a plan made against a
-    # COLD cache cannot see the frame's hashpartitioning(sh) — the
-    # InMemoryRelation wraps an unfinalized AdaptiveSparkPlan, so
-    # EnsureRequirements re-shuffles BOTH sides of every inverted-index
-    # self-join (two full exchanges of the exploded shingle frame, the
-    # dominant shuffle at scale) and the racing same-job readers
-    # serialize on block locks while populating it. Materializing here
-    # finalizes the cached plan, so even the FIRST consumer plans
-    # SortMergeJoin directly over InMemoryTableScan with zero join-side
-    # exchanges. Cost: one extra job per cache build (cold A/B at
-    # sf0.1: 8.9 s one-shot cold plan -> 2.5 s + build with the eager
-    # count). This is a lazy-plan cache keyed to the source fingerprint,
-    # populated inside the measured run — not cross-run result reuse.
-    sh.count()
-    if key is not None:
-        old = _SHARED_SH.get("df")
-        if old is not None:
-            try:
-                old.unpersist(blocking=False)
-            except Exception:
-                # the previous frame's session may be stopped —
-                # its cache died with the session; nothing to free
-                pass
-        _SHARED_SH.update(key=key, df=sh)
-    return sh
 
 
 def _shingles_with_sizes(
@@ -539,7 +498,7 @@ def minhash_signatures(
     num_hashes: int = 64,
     k: int = 3,
     max_doc_freq: int | None = None,
-    engine: str = "arrow",
+    engine: str | None = None,
 ) -> DataFrame:
     """(id, sig array<long>) — num_hashes independent min-hashes.
 
@@ -550,7 +509,7 @@ def minhash_signatures(
     sf0.1). Each hash function is a cheap long-input remix of the
     single string hash (hashing the string once, not 64 times).
 
-    ``engine='arrow'`` (default) evaluates the 64 min-remixes in ONE
+    ``engine='arrow'`` (the default) evaluates the 64 min-remixes in ONE
     vectorized numpy kernel over Arrow batches (guide: do the heavy
     lifting in native code inside the map stage). The kernel is a
     bit-exact replication of Spark's two-argument ``xxhash64(int,
@@ -590,9 +549,7 @@ def minhash_signatures(
         F.transform(_word_grams(toks, k), lambda g: F.xxhash64(g)),
     ).otherwise(F.array(F.xxhash64(F.concat_ws(" ", toks))))
     docs_g = docs.select(F.col(id_col).alias("id"), grams.alias("grams"))
-    if engine == "arrow" and not _arrow_engine_available():
-        engine = "jvm"  # numpy-less deployment: keep the Catalyst twin
-    if engine == "arrow":
+    if _resolve_engine(engine) == "arrow":
         # the kernel passes ids through untouched — declare their
         # NATIVE type (string doc ids are the common corpus key; a
         # hard-coded bigint would silently null them)
@@ -755,7 +712,7 @@ def simhash(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    engine: str = "arrow",
+    engine: str | None = None,
 ) -> DataFrame:
     """(id, simhash long) — 64-bit SimHash over distinct tokens.
 
@@ -772,9 +729,7 @@ def simhash(
     tests/test_dedup.py. Docs with NULL text are dropped by both
     paths (explode of null vs an explicit filter)."""
     docs = _spread(docs)
-    if engine == "arrow" and not _arrow_engine_available():
-        engine = "jvm"  # numpy-less deployment: keep the Catalyst twin
-    if engine == "arrow":
+    if _resolve_engine(engine) == "arrow":
         hs = F.transform(
             F.array_distinct(F.split(F.col(text_col), " ", -1)),
             lambda t: F.xxhash64(t),

@@ -30,18 +30,10 @@ def brute_force_topk(
     k: int = 5,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    dim: int | None = None,
 ) -> DataFrame:
-    """Pass ``dim`` when the embedding width is schema-guaranteed: the
-    corpus-x-query dots then use the unrolled codegen chain
-    (functions.vector.dot_unrolled — bit-identical to the interpreted
-    higher-order fold, but whole-stage-compiled)."""
-    from python_etl_spark.functions.vector import dot_unrolled
-
-    nsq = dot_unrolled("vec", "vec", dim) if dim else norm_sq_exact("vec")
     v = embeddings.select(
         F.col(id_col).alias("id"), as_double(vec_col).alias("vec")
-    ).select("id", "vec", nsq.alias("nsq"))
+    ).select("id", "vec", norm_sq_exact("vec").alias("nsq"))
     queries = v.where(F.col("id").isin(query_ids)).select(
         F.col("id").alias("query_id"),
         F.col("vec").alias("qvec"),
@@ -52,11 +44,9 @@ def brute_force_topk(
         F.col("vec").alias("cvec"),
         F.col("nsq").alias("cnsq"),
     )
-    dp = (
-        dot_unrolled("qvec", "cvec", dim) if dim
-        else dot_exact("qvec", "cvec")
+    cos = cosine_from_parts(
+        dot_exact("qvec", "cvec"), F.col("qnsq"), F.col("cnsq")
     )
-    cos = cosine_from_parts(dp, F.col("qnsq"), F.col("cnsq"))
     scored = (
         corpus.join(F.broadcast(queries))
         .where(F.col("neighbor_id") != F.col("query_id"))

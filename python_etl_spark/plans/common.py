@@ -21,6 +21,8 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from python_etl_spark.memo import plan_key, session_memo
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
@@ -45,16 +47,6 @@ from python_etl_spark.functions.exact import (  # noqa: F401
     ts,
     ts_sql,
 )
-
-
-def stable_digest(s: str, n: int = 8) -> str:
-    """Deterministic short digest for on-disk cache-root names.
-    Python's built-in ``hash`` is PYTHONHASHSEED-salted, so a path
-    named with it changes every driver process and leaks the previous
-    run's directory (ADVICE r9); md5 is stable across processes."""
-    import hashlib
-
-    return hashlib.md5(s.encode("utf-8")).hexdigest()[:n]
 
 
 # ----------------------- broadcast-hint policy ----------------------------
@@ -86,19 +78,6 @@ def _parse_size_bytes(s: str) -> int:
     return int(float(s)) * mult
 
 
-# (applicationId, analyzed-plan semanticHash, source fingerprint,
-# threshold) -> hint?
-# The .stats() probe runs a full Catalyst analyze+optimize pass on the
-# dim subplan DRIVER-SIDE on every call (~80 ms); a sweep calls bc_dim
-# with the same handful of dim plans hundreds of times. The decision
-# is a pure function of the optimized plan, the BACKING FILES and the
-# threshold — semanticHash alone is stable across an in-place rewrite
-# of the same path, so a regenerated (now-large) table could be served
-# a stale hint=True and broadcast, defeating the size-honesty contract
-# (ADVICE r14). The file fingerprint closes that hole.
-_BC_DIM_MEMO: dict[tuple, bool] = {}
-
-
 def bc_dim(df: DataFrame) -> DataFrame:
     """Size-honest broadcast hint for SF-scaling dimension tables.
 
@@ -109,31 +88,28 @@ def bc_dim(df: DataFrame) -> DataFrame:
     returned unhinted and AQE picks broadcast-vs-shuffle from observed
     runtime sizes. At test SFs customer/part/supplier estimate in the
     low MBs, so plans are unchanged; at 100 TB the same code degrades
-    to a shuffle join instead of a driver OOM."""
+    to a shuffle join instead of a driver OOM.
+
+    The .stats() probe runs a full Catalyst analyze+optimize pass
+    driver-side (~80 ms) and a sweep asks about the same handful of dim
+    plans hundreds of times, so the decision is memoized per (plan,
+    backing files, threshold): the file fingerprint keeps a regenerated
+    (now-large) table from being served a stale hint (ADVICE r14)."""
     try:
         thr = _parse_size_bytes(
             df.sparkSession.conf.get(
                 "spark.sql.autoBroadcastJoinThreshold", "10485760b"
             )
         )
-        from python_etl_spark.sources.tables import source_fingerprint
 
-        key = (
-            df.sparkSession.sparkContext.applicationId,
-            df._jdf.queryExecution().analyzed().semanticHash(),
-            source_fingerprint(df),
-            thr,
-        )
-        hint = _BC_DIM_MEMO.get(key)
-        if hint is None:
+        def build() -> bool:
             est = int(
                 df._jdf.queryExecution().optimizedPlan().stats()
                 .sizeInBytes().toString()
             )
-            hint = 0 < est <= thr
-            if len(_BC_DIM_MEMO) > 4096:  # bound against key churn
-                _BC_DIM_MEMO.clear()
-            _BC_DIM_MEMO[key] = hint
+            return 0 < est <= thr
+
+        hint = session_memo("bc_dim", plan_key(df, thr), build, capacity=4096)
     except Exception:
         return df
     if hint:

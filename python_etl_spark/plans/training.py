@@ -49,13 +49,13 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from python_etl_spark.memo import session_dir
 from python_etl_spark.plans.checked import _rademacher, _w_sql
 from python_etl_spark.plans.common import (
     dmean_sql,
     dsum,
     dsum_sql,
     register,
-    stable_digest,
 )
 from python_etl_spark.sources.tables import load_table
 
@@ -1495,9 +1495,6 @@ def text_exact_substr_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------- incremental dedup (hash-checked) -------------------
 
-_INCR_STORE_CACHE: dict = {}
-
-
 @register(
     "etl_incremental_dedup",
     oracle=r"""
@@ -1542,8 +1539,6 @@ def etl_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documented in operators/incremental.py): replaying batch 1 after
     batch 2 committed is stable precisely because accepted signature
     sets are disjoint across batches."""
-    import os
-    import tempfile
 
     from python_etl_spark.operators.incremental import IncrementalDeduper
 
@@ -1559,14 +1554,7 @@ def etl_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") + 2000000).alias("doc_id"), "text"
         )
     )
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_incr_{key[0]}_{stable_digest(key[1])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "incr")
     d = IncrementalDeduper(root)
     a1 = d.accept_batch(even, "b1").select(
         "doc_id", F.lit("b1").alias("batch")
@@ -1614,7 +1602,6 @@ def etl_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     proven in tests/test_incremental.py (bookmark no-op replay, crash
     between append and refresh, conflict recompute)."""
     import os
-    import tempfile
 
     from python_etl_spark.operators.incremental import MaterializedRollup
     from python_etl_spark.sinks.table import VersionedTable
@@ -1626,18 +1613,7 @@ def etl_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").cast("decimal(28,6)").alias("price"),
         "o_orderdate",
     )
-    key = (
-        "rollup",
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-    )
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_mroll_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "mroll")
     source = VersionedTable(os.path.join(root, "source"))
     rollup = MaterializedRollup(
         os.path.join(root, "rollup"),
@@ -2291,18 +2267,10 @@ def _cdf_source(spark: SparkSession, sf_dir: str):
     v0 create, v1 merge (track_changes), v2 delete. Re-entrant: each
     step only runs if its version is missing."""
     import os
-    import tempfile
 
     from python_etl_spark.sinks.table import VersionedTable
 
-    key = ("cdf", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_cdf_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "cdf")
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_orderpriority").alias("priority"),
@@ -2514,19 +2482,10 @@ def _mclause_source(spark: SparkSession, sf_dir: str):
     """Build (once per session+sf) the 2-commit clause-MERGE table:
     v0 create, v1 conditional merge. Re-entrant like _cdf_source."""
     import os
-    import tempfile
 
     from python_etl_spark.sinks.table import VersionedTable
 
-    key = ("mclause", spark.sparkContext.applicationId,
-           os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_mclause_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "mclause")
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_orderpriority").alias("priority"),
@@ -2652,18 +2611,10 @@ def _mor_source(spark: SparkSession, sf_dir: str):
     subset (they live in a newer dir, outside the tombstone's scope,
     and must survive). Re-entrant like _cdf_source."""
     import os
-    import tempfile
 
     from python_etl_spark.sinks.table import VersionedTable
 
-    key = ("mor", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_mor_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "mor")
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_orderpriority").alias("priority"),
@@ -2766,18 +2717,10 @@ def _widen_source(spark: SparkSession, sf_dir: str):
     (long keys, long qty, decimal(18,2)) + a NEW column — additive
     evolution and type widening in one batch. Re-entrant."""
     import os
-    import tempfile
 
     from python_etl_spark.sinks.table import VersionedTable
 
-    key = ("widen", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_widen_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "widen")
     orders = _t(spark, sf_dir, "orders")
     t = VersionedTable(os.path.join(root, "source"))
     if not t.exists():
@@ -2981,18 +2924,10 @@ def etl_snapshot_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle self-contained. Time travel supplies the baseline: the
     query literally reads ``t.read(spark, 0)`` against latest."""
     import os
-    import tempfile
 
     from python_etl_spark.sinks.table import VersionedTable
 
-    key = ("drift", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_drift_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "drift")
     orders = _t(spark, sf_dir, "orders")
     t = VersionedTable(os.path.join(root, "t"))
     if not t.exists():
@@ -3083,18 +3018,10 @@ def etl_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit test per dir (manifest-embedded, size-capped blooms); the
     lookup reads only admitting dirs' files."""
     import os
-    import tempfile
 
     from python_etl_spark.sinks.table import VersionedTable
 
-    key = ("ptlk", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_ptlk_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "ptlk")
     orders = _t(spark, sf_dir, "orders")
     # thin to the NIGHTLY-INCREMENT shape blooms are designed for:
     # per-dir key blooms are size-capped (200k keys — beyond that the
@@ -3155,19 +3082,11 @@ def etl_sql_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: O(touched dirs) rewrite — an UPDATE touching one
     ingest day rewrites that day's dirs, never the corpus."""
     import os
-    import tempfile
 
     from python_etl_spark import sql as vt_sql
     from python_etl_spark.sinks.table import VersionedTable
 
-    key = ("squpd", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_squpd_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "squpd")
     orders = _t(spark, sf_dir, "orders")
     t = VersionedTable(os.path.join(root, "t"))
     if not t.exists():
@@ -3236,19 +3155,11 @@ def etl_sql_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a Catalyst scan of the snapshot, the MERGE routes to the
     dir-pruned library merge, DELETE to the dir-pruned delete."""
     import os
-    import tempfile
 
     from python_etl_spark import sql as vt_sql
     from python_etl_spark.sinks.table import VersionedTable
 
-    key = ("sqldml", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_sqldml_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "sqldml")
     orders = _t(spark, sf_dir, "orders")
     t = VersionedTable(os.path.join(root, "t"))
     if not t.exists():
@@ -3347,19 +3258,11 @@ def etl_sql_merge_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning is key-based and subset-agnostic); assignment
     expressions are Catalyst ``F.expr`` projections, zero Python."""
     import os
-    import tempfile
 
     from python_etl_spark import sql as vt_sql
     from python_etl_spark.sinks.table import VersionedTable
 
-    key = ("squms", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_squms_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "squms")
     orders = _t(spark, sf_dir, "orders")
     t = VersionedTable(os.path.join(root, "t"))
     if not t.exists():
@@ -3426,19 +3329,11 @@ def etl_sql_copy_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     never data), and scans ONLY the new files; rows land through the
     append path with constraints/stats/blooms intact."""
     import os
-    import tempfile
 
     from python_etl_spark import sql as vt_sql
     from python_etl_spark.sinks.table import VersionedTable
 
-    key = ("sqcpy", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_sqcpy_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "sqcpy")
     orders = _t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").cast("long").alias("k"),
         (F.col("o_orderkey") % 100).cast("long").alias("qty"),
@@ -3515,19 +3410,11 @@ def etl_sql_copy_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side filter over the listing (O(#stage files)), and
     evolution is the append path's metadata-only schema record."""
     import os
-    import tempfile
 
     from python_etl_spark import sql as vt_sql
     from python_etl_spark.sinks.table import VersionedTable
 
-    key = ("sqcev", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_sqcev_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "sqcev")
     orders = _t(spark, sf_dir, "orders")
     t = VersionedTable(os.path.join(root, "t"))
     stage = os.path.join(root, "stage")
@@ -3620,19 +3507,11 @@ def etl_sql_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(1) rename per table at next read; no data is rewritten at the
     commit point."""
     import os
-    import tempfile
 
     from python_etl_spark.sql import sql_script
     from python_etl_spark.sinks.table import VersionedTable
 
-    key = ("sqtxn", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_sqtxn_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "sqtxn")
     orders = _t(spark, sf_dir, "orders")
     t1 = VersionedTable(os.path.join(root, "t1"))
     t2 = VersionedTable(os.path.join(root, "t2"))
@@ -3714,18 +3593,10 @@ def etl_identity_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast offsets join over a checkpointed frame — zero row
     shuffles, zero Python; the high-water walk is metadata-only."""
     import os
-    import tempfile
 
     from python_etl_spark.sinks.table import VersionedTable
 
-    key = ("ident", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_ident_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "ident")
     orders = _t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").cast("long").alias("k"),
         F.col("o_orderstatus").alias("status"),
@@ -3825,18 +3696,10 @@ def etl_identity_by_default(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids; auto assignment is the O(#partitions) offsets join. Zero
     row shuffles beyond the probe's one equijoin."""
     import os
-    import tempfile
 
     from python_etl_spark.sinks.table import VersionedTable
 
-    key = ("identd", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_identd_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "identd")
     orders = _t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").cast("long").alias("k"),
         F.col("o_orderstatus").alias("status"),
@@ -3904,18 +3767,10 @@ def _mevolve_source(spark: SparkSession, sf_dir: str):
     k %% 4 == 0 keys and inserts shifted new keys (offset 4e9 — above
     any replica's key range). Re-entrant like _cdf_source."""
     import os
-    import tempfile
 
     from python_etl_spark.sinks.table import VersionedTable
 
-    key = ("mevolve", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_mevolve_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "mevolve")
     orders = _t(spark, sf_dir, "orders")
     t = VersionedTable(os.path.join(root, "source"))
     if not t.exists():
@@ -4048,18 +3903,10 @@ def _mor_keyed_source(spark: SparkSession, sf_dir: str):
     _mor_source's, so the query shares etl_mor_delete's oracle
     verbatim."""
     import os
-    import tempfile
 
     from python_etl_spark.sinks.table import VersionedTable
 
-    key = ("mork", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_mork_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "mork")
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_orderpriority").alias("priority"),
@@ -4117,18 +3964,10 @@ def _rename_source(spark: SparkSession, sf_dir: str):
     half the new — only the manifest name-mapping makes them one
     column. Re-entrant like _cdf_source."""
     import os
-    import tempfile
 
     from python_etl_spark.sinks.table import VersionedTable
 
-    key = ("rename", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_rename_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "rename")
     orders = _t(spark, sf_dir, "orders")
     t = VersionedTable(os.path.join(root, "source"))
     if not t.exists():
@@ -4186,18 +4025,10 @@ def _bloom_merge_source(spark: SparkSession, sf_dir: str):
     append, v2 keyed MERGE (updates + inserts). The merge's touched-dir
     discovery exercises the bloom pass end-to-end. Re-entrant."""
     import os
-    import tempfile
 
     from python_etl_spark.sinks.table import VersionedTable
 
-    key = ("bloomm", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_bloomm_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "bloomm")
     orders = _t(spark, sf_dir, "orders").select(
         F.md5(F.col("o_orderkey").cast("string")).alias("k"),
         F.col("o_orderkey").alias("id"),
@@ -4266,18 +4097,10 @@ def _fileskip_source(spark: SparkSession, sf_dir: str):
     tight key range, so the manifest's per-file stats can prune inside
     the dir. Re-entrant."""
     import os
-    import tempfile
 
     from python_etl_spark.sinks.table import VersionedTable
 
-    key = ("fskip", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_fskip_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "fskip")
     t = VersionedTable(os.path.join(root, "source"))
     if not t.exists():
         li = _t(spark, sf_dir, "lineitem").select(
@@ -4334,18 +4157,10 @@ def _optimize_source(spark: SparkSession, sf_dir: str):
     a MOR delete (k %% 7 == 0), then ONE optimize() call that
     materializes the DVs and bin-packs the small dirs. Re-entrant."""
     import os
-    import tempfile
 
     from python_etl_spark.sinks.table import VersionedTable
 
-    key = ("optim", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_optim_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "optim")
     orders = _t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
         F.col("o_orderpriority").alias("priority"),
@@ -4405,18 +4220,10 @@ def _drop_source(spark: SparkSession, sf_dir: str):
     because the drop really took effect, so the final state certifies
     the whole chain. Re-entrant."""
     import os
-    import tempfile
 
     from python_etl_spark.sinks.table import VersionedTable
 
-    key = ("dropc", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_dropc_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "dropc")
     orders = _t(spark, sf_dir, "orders")
     t = VersionedTable(os.path.join(root, "source"))
     if not t.exists():
@@ -4477,21 +4284,13 @@ def _constraints_source(spark: SparkSession, sf_dir: str):
     live snapshot), a violating merge REFUSED, v3 valid merge insert.
     Re-entrant across driver/oracle replays."""
     import os
-    import tempfile
 
     from python_etl_spark.sinks.table import (
         ConstraintViolationError,
         VersionedTable,
     )
 
-    key = ("cons", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_cons_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "cons")
     orders = _t(spark, sf_dir, "orders")
     base = orders.select(
         F.col("o_orderkey").alias("k"),
@@ -4579,18 +4378,10 @@ def _zorder_source(spark: SparkSession, sf_dir: str):
     Re-entrant: the provenance skip makes the second optimize a
     no-op."""
     import os
-    import tempfile
 
     from python_etl_spark.sinks.table import VersionedTable
 
-    key = ("zord", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_zord_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "zord")
     orders = _t(spark, sf_dir, "orders")
     t = VersionedTable(os.path.join(root, "source"))
     if not t.exists():
@@ -4663,18 +4454,10 @@ def _zorder_str_source(spark: SparkSession, sf_dir: str):
     string key — and a BARE optimize() (no schema knowledge) Z-orders
     on them via sampled lexicographic boundaries. Re-entrant."""
     import os
-    import tempfile
 
     from python_etl_spark.sinks.table import VersionedTable
 
-    key = ("zords", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_zords_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "zords")
     orders = _t(spark, sf_dir, "orders")
     t = VersionedTable(os.path.join(root, "source"))
     if not t.exists():
@@ -4748,18 +4531,10 @@ def _clone_source(spark: SparkSession, sf_dir: str):
     the evens (divergence both asserted here and hash-certified by
     the oracle). Re-entrant."""
     import os
-    import tempfile
 
     from python_etl_spark.sinks.table import VersionedTable
 
-    key = ("clone", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_clone_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "clone")
     orders = _t(spark, sf_dir, "orders")
     base = orders.select(
         F.col("o_orderkey").alias("k"),
@@ -5039,18 +4814,10 @@ def _partev_source(spark: SparkSession, sf_dir: str):
     commit dir itself, so a silently-flat append fails the fixture
     before the hash can pass. Re-entrant."""
     import os
-    import tempfile
 
     from python_etl_spark.sinks.table import VersionedTable
 
-    key = ("pev", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_pev_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "pev")
     orders = _t(spark, sf_dir, "orders")
     base = orders.select(
         F.col("o_orderkey").alias("k"),
@@ -5110,21 +4877,13 @@ def _generated_source(spark: SparkSession, sf_dir: str):
     table unchanged, v2 append WITH the correct values (verified).
     Re-entrant."""
     import os
-    import tempfile
 
     from python_etl_spark.sinks.table import (
         ConstraintViolationError,
         VersionedTable,
     )
 
-    key = ("gcol", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_gcol_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "gcol")
     orders = _t(spark, sf_dir, "orders")
     base = orders.select(
         F.col("o_orderkey").alias("k"),
@@ -5207,19 +4966,11 @@ def _sqlddl_source(spark: SparkSession, sf_dir: str):
     the constraint is REFUSED (marker row on the oracle). Re-entrant
     like _cdf_source."""
     import os
-    import tempfile
 
     from python_etl_spark import sql as vt_sql
     from python_etl_spark.sinks.table import VersionedTable
 
-    key = ("sqlddl", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_sqlddl_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "sqlddl")
     tr = os.path.join(root, "t")
     t = VersionedTable(tr)
     if not t.exists():
@@ -5380,20 +5131,12 @@ def etl_sql_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     per statement, before Catalyst sees the query — never on the
     data path."""
     import os
-    import tempfile
 
     from python_etl_spark import sql as vt_sql
     from python_etl_spark.catalog import Catalog
     from python_etl_spark.sinks.table import VersionedTable
 
-    key = ("sqlcat", spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    root = _INCR_STORE_CACHE.get(key)
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_sqlcat_{key[1]}_{stable_digest(key[2])}",
-        )
-        _INCR_STORE_CACHE[key] = root
+    root = session_dir(spark, sf_dir, "sqlcat")
     cat_path = os.path.join(root, "catalog.json")
     spark.conf.set("spark.python_etl_spark.catalog", cat_path)
     name = "vtcat_nation"

@@ -21,12 +21,8 @@ from python_etl_spark.operators.bpe import (
     train_bpe,
 )
 from python_etl_spark.operators.html import html_extract_col, html_links_col
-from python_etl_spark.plans.common import (
-    dmean,
-    dmean_sql,
-    register,
-    stable_digest,
-)
+from python_etl_spark.memo import session_dir, session_drop, session_memo
+from python_etl_spark.plans.common import dmean, dmean_sql, register
 from python_etl_spark.sources.tables import load_table
 
 
@@ -741,39 +737,33 @@ def text_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 # replay the page-construction arithmetic straight from `documents`,
 # so a hash match proves the WARC round-trip changed NOTHING.
 
-_WARC_CACHE: dict = {}
-
 
 def _warc_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Session-scoped WARC materialization of the synthetic crawl
-    (same memo posture as the shared shingle cache: keyed on
-    applicationId + source dir, built once, reused by every WARC
-    query in the session)."""
+    """Session-scoped WARC materialization of the synthetic crawl:
+    built once per (session, source dir) and reused by every WARC
+    query in the session; rebuilt if the directory has vanished."""
     import os
-    import tempfile
 
     from python_etl_spark.sources.warc import write_warc
 
+    out = session_dir(spark, sf_dir, "warc")
     key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    hit = _WARC_CACHE.get(key)
-    if hit and os.path.isdir(hit):
-        return hit
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_warc_{key[0]}_{stable_digest(key[1])}",
-    )
-    pages = _html_docs(spark, sf_dir).select(
-        F.concat(
-            F.lit("https://warc.example.com/doc/"),
-            F.col("doc_id").cast("string"),
-        ).alias("target_uri"),
-        F.col("html").alias("body"),
-    )
-    # 8 containers: enough files that read_warc's one-task-per-file
-    # parallelism is actually exercised at test scale
-    write_warc(pages.repartition(8), out)
-    _WARC_CACHE[key] = out
-    return out
+    if not os.path.isdir(out):
+        session_drop("warc", key)
+
+    def build() -> str:
+        pages = _html_docs(spark, sf_dir).select(
+            F.concat(
+                F.lit("https://warc.example.com/doc/"),
+                F.col("doc_id").cast("string"),
+            ).alias("target_uri"),
+            F.col("html").alias("body"),
+        )
+        # 8 containers: enough files that read_warc's one-task-per-file
+        # parallelism is actually exercised at test scale
+        return write_warc(pages.repartition(8), out)
+
+    return session_memo("warc", key, build, capacity=64)
 
 
 def _warc_docs(spark: SparkSession, sf_dir: str) -> DataFrame:

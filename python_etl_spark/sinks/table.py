@@ -108,6 +108,9 @@ _MANIFEST_RE = re.compile(r"v(\d{8})\.json$")
 _CKPT_RE = re.compile(r"ckpt-v(\d{8})\.json$")
 _DEFAULT_RETRIES = 3
 _DEFAULT_CHECKPOINT_INTERVAL = 10
+# Manifest-meta key of the incremental-extract bookmark (incremental.py);
+# checkpoints fold the newest one.
+WATERMARK_KEY = "watermark"
 
 
 _WIDEN_ORDER = ["tinyint", "smallint", "int", "bigint"]  # simpleString names
@@ -1476,12 +1479,22 @@ class VersionedTable:
         renames: list[dict] = list(prev.get("renames") or []) if prev else []
         drops: list[str] = list(prev.get("drops") or []) if prev else []
         cons: dict = dict(prev.get("constraints") or {}) if prev else {}
+        # The newest incremental-extract bookmark: its manifest may be
+        # dropped by clean_metadata. A previous checkpoint without the
+        # key (written before bookmarks were folded) does not know the
+        # bookmarks below it, so the key is written only when the chain
+        # is complete or the tail has a bookmark of its own.
+        wm_known = prev is None or WATERMARK_KEY in prev
+        watermark = prev.get(WATERMARK_KEY) if prev else None
 
         def _fold(meta: dict) -> None:
-            nonlocal evolved, schema_json, cons
+            nonlocal evolved, schema_json, cons, watermark, wm_known
             evolved = evolved or bool(meta.get("schema_evolved"))
             if meta.get("schema_json"):
                 schema_json = meta["schema_json"]
+            if (meta.get(WATERMARK_KEY) or {}).get("value") is not None:
+                watermark = meta[WATERMARK_KEY]
+                wm_known = True
             if meta.get("rename"):
                 renames.append(meta["rename"])
             if meta.get("drop"):
@@ -1537,6 +1550,8 @@ class VersionedTable:
             "cluster_keys": self.cluster_keys(),
             "commits": commits,
         }
+        if wm_known:
+            ckpt[WATERMARK_KEY] = watermark
         self._atomic_write(self._ckpt_path(version), json.dumps(ckpt))
 
     def _latest_checkpoint(self, upto: int | None = None) -> dict | None:

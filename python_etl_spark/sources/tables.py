@@ -15,6 +15,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from python_etl_spark.memo import (
+    _dir_fingerprint,
+    session_drop,
+    session_keys,
+    session_memo,
+)
 from python_etl_spark.session import apply_runtime_confs
 
 TABLE_NAMES = [
@@ -40,15 +46,13 @@ _NS_TO_NTZ = (
 )
 
 
-# Session-scoped memo of loaded table frames. spark.read.parquet()
-# re-lists the directory and re-reads footers for schema inference on
-# EVERY call; a sweep builds hundreds of plans over the same ten
-# paths, so that driver-side work (plus the py4j traffic) was paid per
-# query construction. A DataFrame is a lazy plan — reusing the object
-# never caches data, every action still computes from the parquet
-# files. The file fingerprint (name, size, mtime) invalidates the memo
-# when a path is overwritten in-session (e.g. make_scale_replica
-# regenerating a dir), which plan-object reuse alone would miss.
+# spark.read.parquet() re-lists the directory and re-reads footers for
+# schema inference on EVERY call; a sweep builds hundreds of plans over
+# the same ten paths, so the loaded frame is memoized per session. A
+# DataFrame is a lazy plan: reusing the object never caches data, every
+# action still computes from the parquet files. The directory
+# fingerprint (name, size, mtime) in the key misses when a path is
+# overwritten in-session (e.g. make_scale_replica regenerating a dir).
 #
 # CONTRACT NOTE (ADVICE r14): repeated loads of the same path return
 # the IDENTICAL DataFrame object (same exprIds). A query that joins two
@@ -57,88 +61,29 @@ _NS_TO_NTZ = (
 # rename columns on at least one side (every current query does — the
 # planful ones select+alias both sides), exactly as they would for
 # ``df.join(df)``.
-_TABLE_MEMO: dict[tuple, DataFrame] = {}
-
-
-def _dir_fingerprint(path: str) -> tuple:
-    import os
-
-    try:
-        if os.path.isdir(path):
-            ents = []
-            for n in sorted(os.listdir(path)):
-                st = os.stat(os.path.join(path, n))
-                ents.append((n, st.st_size, st.st_mtime_ns))
-            return tuple(ents)
-        st = os.stat(path)
-        return ((path, st.st_size, st.st_mtime_ns),)
-    except OSError:
-        return (None,)
-
-
-def source_fingerprint(df: DataFrame) -> tuple:
-    """Best-effort fingerprint of a frame's backing files.
-
-    Session memos keyed on (applicationId, analyzed-plan semanticHash)
-    alone go stale when the SAME path is overwritten in-session —
-    semanticHash is a pure function of the plan, not the files (e.g.
-    make_scale_replica regenerating a dir). Every plan-derived memo
-    (load_table, bc_dim, _spread, the shared shingle cache) therefore
-    also keys on this: local ``file:`` paths contribute
-    (size, mtime_ns) from a driver-side stat; other schemes contribute
-    path only. Cost is one metadata stat per file — no data motion,
-    no job."""
-    import os
-    from urllib.parse import unquote, urlparse
-
-    try:
-        files = sorted(df.inputFiles())
-    except Exception:  # non-file-source plans (views, ranges, ...)
-        return (None,)
-    parts = []
-    for f in files:
-        ent = f
-        parsed = urlparse(f)
-        if parsed.scheme in ("file", ""):
-            try:
-                st = os.stat(unquote(parsed.path) or f)
-                ent = f"{f}|{st.st_size}|{st.st_mtime_ns}"
-            except OSError:
-                pass
-        parts.append(ent)
-    import hashlib
-
-    return (hashlib.md5("\n".join(parts).encode()).hexdigest(),)
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     apply_runtime_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
-    key = (
-        spark.sparkContext.applicationId,
-        path,
-        _dir_fingerprint(path),
-    )
-    cached = _TABLE_MEMO.get(key)
-    if cached is not None:
-        return cached
-    df = spark.read.parquet(path)
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.selectExpr(
-            "event_id",
-            _NS_TO_NTZ.format(c="ts") + " as ts",
-            "user_id",
-            "event_type",
-            "value",
-            "props",
-        )
-    # bound the memo: drop entries from other (stopped) sessions and
-    # stale fingerprints of this path
-    app = key[0]
-    for k in [k for k in _TABLE_MEMO if k[0] != app or (k[1] == path and k != key)]:
-        del _TABLE_MEMO[k]
-    _TABLE_MEMO[key] = df
-    return df
+
+    def build() -> DataFrame:
+        df = spark.read.parquet(path)
+        if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+            df = df.selectExpr(
+                "event_id",
+                _NS_TO_NTZ.format(c="ts") + " as ts",
+                "user_id",
+                "event_type",
+                "value",
+                "props",
+            )
+        # an overwritten path's older frames go now, not at the bound
+        for k in session_keys("tables"):
+            if k[1] == path:
+                session_drop("tables", k)
+        return df
+
+    key = (spark.sparkContext.applicationId, path, _dir_fingerprint(path))
+    return session_memo("tables", key, build, capacity=1024)
 
 
 def load_tables(

@@ -38,8 +38,8 @@ def main() -> None:
         "mm_exif_probe",
     }
 
-    # Fixture-backed queries (VersionedTable demos cached per session
-    # via _INCR_STORE_CACHE) report build_s/query_s SPLIT (r12
+    # Fixture-backed queries (VersionedTable demos under a per-session
+    # root, memo.session_dir) report build_s/query_s SPLIT (r12
     # bookkeeping #2): the first call pays the one-time fixture
     # construction, the second call measures the steady-state query —
     # the number a cross-round regression reader should compare.

@@ -115,6 +115,27 @@ def test_simhash_arrow_kernel_bit_identical_to_jvm(spark, corpus):
         assert arrow == jvm
 
 
+@pytest.mark.parametrize("sketch", ["minhash_signatures", "simhash"])
+def test_sketch_engine_default_falls_back_explicit_arrow_raises(
+    spark, corpus, monkeypatch, sketch
+):
+    """Without numpy/pyarrow only the DEFAULT engine degrades to the
+    JVM twin; an explicit engine='arrow' raises instead of being
+    silently overridden."""
+    from python_etl_spark.operators import dedup
+
+    fn = getattr(dedup, sketch)
+
+    def plan(df):
+        return df._jdf.queryExecution().analyzed().toString()
+
+    assert "MapInArrow" in plan(fn(corpus))
+    monkeypatch.setattr(dedup, "_arrow_engine_available", lambda: False)
+    assert "MapInArrow" not in plan(fn(corpus))
+    with pytest.raises(ImportError, match="engine='jvm'"):
+        fn(corpus, engine="arrow")
+
+
 def test_minhash_lsh_finds_near_dup(spark, corpus):
     pairs = {
         (r.doc_a, r.doc_b)
@@ -267,8 +288,8 @@ def test_shared_shingle_memo_invalidates_on_overwrite(spark, tmp_path):
     """Overwriting the source files in place must MISS the memo: the
     plan semanticHash is path-stable, so only the (size, mtime) source
     fingerprint distinguishes old data from new (ADVICE r4)."""
+    from python_etl_spark.memo import session_keys
     from python_etl_spark.operators.dedup import (
-        _SHARED_SH,
         clear_shared_shingle_cache,
         shared_shingle_hashes,
     )
@@ -294,10 +315,11 @@ def test_shared_shingle_memo_invalidates_on_overwrite(spark, tmp_path):
         second = shared_shingle_hashes(spark.read.parquet(path))
         assert second is not first
         assert second.count() > n_first  # fresh data, not the stale cache
-        assert _SHARED_SH.get("key")[0] == spark.sparkContext.applicationId
+        (key,) = session_keys("shared_shingles")  # one slot
+        assert key[0] == spark.sparkContext.applicationId
     finally:
         clear_shared_shingle_cache()
-        assert "df" not in _SHARED_SH and "key" not in _SHARED_SH
+        assert session_keys("shared_shingles") == []
 
 
 def test_pagerank_matches_numpy_power_iteration(spark):

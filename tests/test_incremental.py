@@ -5,11 +5,13 @@ rows on the retry)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from python_etl_spark.incremental import incremental_load, last_watermark
-from python_etl_spark.sinks.table import VersionedTable
+from python_etl_spark.sinks.table import WATERMARK_KEY, VersionedTable
 
 
 def _src(spark, lo, hi):
@@ -191,6 +193,55 @@ def test_compact_resets_commit_dirs_and_keeps_bookmark(spark, tmp_path):
     r = incremental_load(_src(spark, 0, 100), t, "wm")
     assert r["rows_loaded"] == 20
     assert t.read(spark).count() == 101
+
+
+def test_incremental_bookmark_survives_metadata_cleanup(spark, tmp_path):
+    """optimize() past 2 * checkpoint_interval manifests checkpoints and
+    drops the manifests below the checkpoint (clean_metadata). When the
+    bookmark lived only in a dropped manifest (meta-less backfill
+    appends came after the last load), it must come from the
+    checkpoint: the next run loads exactly the new rows, without a
+    FileNotFoundError on a dropped manifest."""
+    t = VersionedTable(str(tmp_path / "tck"), checkpoint_interval=2)
+    incremental_load(_src(spark, 0, 20), t, "wm")
+    incremental_load(_src(spark, 0, 40), t, "wm")
+    for i in range(3):  # backfill appends without watermark meta
+        t.append(
+            spark.createDataFrame([(1000 + i, 0, 5)], "k long, v long, wm long")
+        )
+    t.optimize(spark)
+    assert not os.path.exists(t._manifest_path(0))  # cleaned
+    assert last_watermark(t) == 39
+    r = incremental_load(_src(spark, 0, 50), t, "wm")
+    assert (r["rows_loaded"], r["watermark"]) == (10, 49)
+    got = t.read(spark)
+    assert got.count() == 53
+    assert got.select("k").distinct().count() == 53
+
+
+def test_bookmark_found_below_checkpoint_without_watermark_key(
+    spark, tmp_path
+):
+    """A checkpoint written before bookmarks were folded has no
+    watermark key, so a later checkpoint built on it must not claim to
+    know the bookmark: with only meta-less appends in its tail it
+    leaves the key out and last_watermark walks the manifests below."""
+    import json
+
+    t = VersionedTable(str(tmp_path / "told"), checkpoint_interval=2)
+    incremental_load(_src(spark, 0, 20), t, "wm")
+    incremental_load(_src(spark, 0, 40), t, "wm")
+    row = spark.createDataFrame([(1000, 0, 5)], "k long, v long, wm long")
+    t.append(row)  # v2: checkpoint
+    with open(t._ckpt_path(2)) as f:
+        old = json.load(f)
+    del old[WATERMARK_KEY]
+    with open(t._ckpt_path(2), "w") as f:
+        json.dump(old, f)
+    t.append(row)
+    t.append(row)  # v4: checkpoint on top of the key-less one
+    assert WATERMARK_KEY not in t._latest_checkpoint()
+    assert last_watermark(t) == 39
 
 
 def test_incremental_split_sequence_equals_one_shot(spark, tmp_path):
